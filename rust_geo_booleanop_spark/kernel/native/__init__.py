@@ -17,8 +17,10 @@ Python workers build it once. Anything failing (no gcc, sandbox without
 exec) degrades to NATIVE_AVAILABLE = False and callers fall back to the
 pure-Python kernel — behavior, not just results, stays identical.
 
-Engine selection for the Spark operators lives in
-`kernel.resolve_boolean_op` (env: SPARK_GRAFT_KERNEL=auto|native|python).
+Engine selection (env: SPARK_GRAFT_KERNEL=auto|native|python) is one
+helper in `kernel/pairs.py`, shared by `kernel.resolve_boolean_op`,
+`resolve_pair_runner` and `resolve_bbox_fn`; the Spark kernel stages reach
+this module through `kernel.pairs.run_pairs`.
 """
 
 from __future__ import annotations

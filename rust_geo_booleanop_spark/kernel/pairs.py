@@ -1,7 +1,7 @@
-"""Pair-level boolean-op runner: one (subject, clipping) JSON pair -> all ops.
+"""Pair-level boolean-op runners and the one batch primitive over them.
 
-This is the unit of work the Spark kernel stage (operators/boolean_join.py)
-executes per candidate pair. Two engines, byte-identical outputs:
+A pair runner takes one (subject, clipping) JSON pair and returns one row
+payload per op. Two engines, byte-identical outputs:
 
 - `pair_boolean_ops_python`: the reference composition — json parse
   (kernel/geojson.py), one `boolean_op` sweep per op, json serialize +
@@ -14,14 +14,23 @@ executes per candidate pair. Two engines, byte-identical outputs:
   case the resolver's wrapper falls back to the Python composition so odd
   inputs keep their original behavior (including exception types).
 
-`resolve_pair_runner` mirrors `kernel.resolve_boolean_op`'s engine
-selection ($SPARK_GRAFT_KERNEL = auto | native | python, validated).
-Byte-identity across engines is pinned by tests/test_native_pairs.py.
+`run_pairs` is the one batch primitive over the pair runner: subject and
+clipping JSON lists in, Arrow result columns out. The boolean-op stage,
+the tile clips and the streaming pair completion all run their pairs
+through it.
+
+`resolve_pair_runner`, `resolve_bbox_fn` and `kernel.resolve_boolean_op`
+share one engine selection ($SPARK_GRAFT_KERNEL = auto | native | python,
+validated). Byte-identity across engines is pinned by
+tests/test_native_pairs.py.
 """
 
 from __future__ import annotations
 
 import os as _os
+from functools import lru_cache
+
+import pyarrow as pa
 
 from .booleanop import KernelLimitExceeded, boolean_op
 from .geojson import multipolygon_bbox, parse_multipolygon, serialize_multipolygon
@@ -54,45 +63,56 @@ def pair_boolean_ops_python(s_json, c_json, ops, boolean_op_fn=None):
     return rows
 
 
-def resolve_pair_runner(engine: str | None = None):
-    """Pick the pair-runner implementation for the kernel stage hot path.
-
-    Same contract as resolve_boolean_op: 'auto' (default) uses the full-C
-    pair runner when available (falling back per-pair to the Python
-    composition over the native sweep when the C parser declines an
-    input); 'python' forces the pure-Python reference path; 'native'
-    requires the C kernel.
-    """
+def _load_native(engine: str | None = None):
+    """The native kernel module when the engine selection ('auto' by
+    default, or $SPARK_GRAFT_KERNEL) allows it and it loads; None when
+    the pure-Python kernel should run. Raises on an unknown engine name
+    and when 'native' is required but the C kernel is unavailable."""
     eng = engine or _os.environ.get("SPARK_GRAFT_KERNEL", "auto")
     if eng not in ("auto", "native", "python"):
+        # A typo like SPARK_GRAFT_KERNEL=pyton silently running the native
+        # kernel would be the opposite of the operator's intent.
         raise ValueError(
             f"unknown kernel engine {eng!r}: expected 'auto', 'native', or 'python'"
         )
     if eng == "python":
-        return pair_boolean_ops_python
-    native_mod = None
+        return None
     try:
         from . import native as native_mod  # compile-on-first-import
     except Exception:
         native_mod = None
     if native_mod is not None and native_mod.NATIVE_AVAILABLE:
-        native_pair = native_mod.pair_boolean_ops_native
-        native_sweep = native_mod.boolean_op_native
-
-        def runner(s_json, c_json, ops):
-            rows = native_pair(s_json, c_json, ops)
-            if rows is None:  # strict-subset miss: Python marshalling path
-                return pair_boolean_ops_python(
-                    s_json, c_json, ops, boolean_op_fn=native_sweep
-                )
-            return rows
-
-        return runner
+        return native_mod
     if eng == "native":
         raise RuntimeError(
             "SPARK_GRAFT_KERNEL=native but the C kernel is unavailable"
         )
-    return pair_boolean_ops_python
+    return None
+
+
+def resolve_pair_runner(engine: str | None = None):
+    """Pick the pair-runner implementation for the kernel stage hot path.
+
+    'auto' (default) uses the full-C pair runner when available (falling
+    back per-pair to the Python composition over the native sweep when
+    the C parser declines an input); 'python' forces the pure-Python
+    reference path; 'native' requires the C kernel.
+    """
+    native_mod = _load_native(engine)
+    if native_mod is None:
+        return pair_boolean_ops_python
+    native_pair = native_mod.pair_boolean_ops_native
+    native_sweep = native_mod.boolean_op_native
+
+    def runner(s_json, c_json, ops):
+        rows = native_pair(s_json, c_json, ops)
+        if rows is None:  # strict-subset miss: Python marshalling path
+            return pair_boolean_ops_python(
+                s_json, c_json, ops, boolean_op_fn=native_sweep
+            )
+        return rows
+
+    return runner
 
 
 def resolve_bbox_fn(engine: str | None = None):
@@ -103,39 +123,54 @@ def resolve_bbox_fn(engine: str | None = None):
     per-string when the C parser declines, so error behavior on malformed
     geometry is identical to the Python path.
     """
-    eng = engine or _os.environ.get("SPARK_GRAFT_KERNEL", "auto")
-    if eng not in ("auto", "native", "python"):
-        raise ValueError(
-            f"unknown kernel engine {eng!r}: expected 'auto', 'native', or 'python'"
-        )
 
     def python_bbox(geom_json):
         return multipolygon_bbox(parse_multipolygon(geom_json))
 
-    if eng == "python":
+    native_mod = _load_native(engine)
+    if native_mod is None:
         return python_bbox
-    native_mod = None
-    try:
-        from . import native as native_mod
-    except Exception:
-        native_mod = None
-    if native_mod is not None and native_mod.NATIVE_AVAILABLE:
-        native_bbox = native_mod.parse_bbox_native
+    native_bbox = native_mod.parse_bbox_native
 
-        def bbox_fn(geom_json):
-            bb = native_bbox(geom_json)
-            return bb if bb is not None else python_bbox(geom_json)
+    def bbox_fn(geom_json):
+        bb = native_bbox(geom_json)
+        return bb if bb is not None else python_bbox(geom_json)
 
-        return bbox_fn
-    if eng == "native":
-        raise RuntimeError(
-            "SPARK_GRAFT_KERNEL=native but the C kernel is unavailable"
-        )
-    return python_bbox
+    return bbox_fn
+
+
+_PAIR_RESULT_SCHEMA = pa.schema(
+    [("op", pa.string()), ("result_json", pa.string()), ("n_polys", pa.int32())]
+    + [(c, pa.float64()) for c in ("xmin", "ymin", "xmax", "ymax")]
+    + [("status", pa.string())]
+)
+
+# resolved once per worker process
+_pair_runner = lru_cache(maxsize=1)(resolve_pair_runner)
+
+
+def run_pairs(subjects, clippings, ops) -> pa.RecordBatch:
+    """Run every (subjects[i], clippings[i]) JSON pair through all `ops`.
+
+    Returns the columns op, result_json, n_polys, xmin, ymin, xmax, ymax,
+    status with one row per (pair, op), pair-major and op-minor. The NaN bbox of an empty result becomes
+    NULL, as Spark's pandas-to-Arrow conversion has always stored it.
+    """
+    run = _pair_runner()
+    rows = [row for s, c in zip(subjects, clippings) for row in run(s, c, ops)]
+    columns = list(zip(*rows)) if rows else [()] * len(_PAIR_RESULT_SCHEMA)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(col, type=field.type, from_pandas=True)
+            for col, field in zip(columns, _PAIR_RESULT_SCHEMA)
+        ],
+        schema=_PAIR_RESULT_SCHEMA,
+    )
 
 
 __all__ = [
     "pair_boolean_ops_python",
+    "run_pairs",
     "resolve_pair_runner",
     "resolve_bbox_fn",
 ]

@@ -2,8 +2,8 @@
 
 Relational shell: subjects ⋈ clippings on case_id (one shuffle; AQE handles
 skew and coalescing), then the Martinez-Rueda kernel runs over Arrow
-batches via mapInPandas — thousands of geometry pairs per Python worker
-call, never per-row Python.
+record batches via mapInArrow — thousands of geometry pairs per Python
+worker call through `kernel.pairs.run_pairs`, never per-row Python UDFs.
 
 Reference semantics: the four ops of lib/src/boolean/mod.rs:21-50, with
 diff_ba = diff with swapped operands (tests/src/helper.rs:35-43).
@@ -13,11 +13,12 @@ from __future__ import annotations
 
 from typing import Iterator, Sequence
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..kernel.pairs import resolve_pair_runner
+from ..kernel.pairs import run_pairs
 
 DEFAULT_OPS = ("intersection", "union", "diff", "xor")
 
@@ -140,58 +141,23 @@ def pair_candidates_salted(
     )
 
 
-RESULT_ROW_KEYS = (
-    "case_id", "subject_url", "clipping_url", "op",
-    "result_json", "n_polys", "xmin", "ymin", "xmax", "ymax", "status",
-)
-
-
-def new_result_rows() -> dict:
-    """Empty column-dict matching BOOLEAN_RESULTS_SCHEMA — the single
-    marshalling definition shared by the batch kernel stage below and the
-    streaming pair completion (streaming/boolean.py), so a schema change
-    cannot silently diverge the two paths."""
-    return {k: [] for k in RESULT_ROW_KEYS}
-
-
-def append_pair_results(rows: dict, pair_run, case_id, s_url, c_url, s_json, c_json, ops):
-    """Run one (subject, clipping) pair through `pair_run` and append the
-    per-op result rows to the `new_result_rows()` column-dict."""
-    for op, result_json, n_polys, xmin, ymin, xmax, ymax, status in (
-        pair_run(s_json, c_json, ops)
-    ):
-        rows["case_id"].append(case_id)
-        rows["subject_url"].append(s_url)
-        rows["clipping_url"].append(c_url)
-        rows["op"].append(op)
-        rows["result_json"].append(result_json)
-        rows["n_polys"].append(n_polys)
-        rows["xmin"].append(xmin)
-        rows["ymin"].append(ymin)
-        rows["xmax"].append(xmax)
-        rows["ymax"].append(ymax)
-        rows["status"].append(status)
-
-
-def _make_kernel_batches(ops: Sequence[str]):
-    def kernel_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Resolved inside the Spark Python worker (after fork): the full-C
-        # pair runner (parse once, sweep per op, serialize in C — byte-
-        # identical, see kernel/pairs.py) when available, bit-identical
-        # pure-Python composition otherwise.
-        pair_run = resolve_pair_runner()
-        for pdf in batches:
-            rows = new_result_rows()
-            for case_id, s_url, c_url, s_json, c_json in zip(
-                pdf["case_id"], pdf["subject_url"], pdf["clipping_url"],
-                pdf["subject_json"], pdf["clipping_json"],
-            ):
-                append_pair_results(
-                    rows, pair_run, case_id, s_url, c_url, s_json, c_json, ops
-                )
-            yield pd.DataFrame(rows)
-
-    return kernel_batches
+def kernel_result_batch(pairs: pa.RecordBatch, ops: Sequence[str]) -> pa.RecordBatch:
+    """(case_id, *_url, *_json) pairs -> BOOLEAN_RESULTS_SCHEMA rows, one
+    per (pair, op), pair-major. The single marshalling definition shared by
+    the batch kernel stage below and the streaming pair completion
+    (streaming/boolean.py), so the two paths cannot diverge."""
+    results = run_pairs(
+        pairs.column("subject_json").to_pylist(),
+        pairs.column("clipping_json").to_pylist(),
+        ops,
+    )
+    keys = pairs.select(["case_id", "subject_url", "clipping_url"]).take(
+        np.repeat(np.arange(pairs.num_rows), len(ops))
+    )
+    return pa.RecordBatch.from_arrays(
+        keys.columns + results.columns,
+        names=keys.schema.names + results.schema.names,
+    )
 
 
 def apply_boolean_ops(
@@ -210,7 +176,15 @@ def apply_boolean_ops(
         from .spatial_join import ensure_parallelism
 
         pairs = ensure_parallelism(pairs)
-    return pairs.mapInPandas(_make_kernel_batches(tuple(ops)), schema=BOOLEAN_RESULTS_SCHEMA)
+    ops = tuple(ops)
+
+    def kernel_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield kernel_result_batch(batch, ops)
+
+    return pairs.select(
+        "case_id", "subject_url", "clipping_url", "subject_json", "clipping_json"
+    ).mapInArrow(kernel_batches, schema=BOOLEAN_RESULTS_SCHEMA)
 
 
 def boolean_pipeline(geoms: DataFrame, ops: Sequence[str] = DEFAULT_OPS) -> DataFrame:

@@ -14,16 +14,18 @@ runs in Python workers over Arrow batches.
 
 from __future__ import annotations
 
+from functools import lru_cache
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 from ..functions.cells import cell_bounds
 from ..kernel.geojson import serialize_multipolygon
-from ..kernel.pairs import resolve_pair_runner
+from ..kernel.pairs import run_pairs
 
 DEFAULT_TILE_LEVEL = 4
 
@@ -32,7 +34,7 @@ def cover_cells_column(xmin, ymin, xmax, ymax, level: int):
     """Covering-cell array as a pure JVM column expression.
 
     Same values as functions/cells.py::bbox_cover_cells (pinned by
-    tests/test_plans_and_sources.py::TestTiling's parity battery): the
+    tests/test_spatial_joins.py's parity battery): the
     floor-divide, the +OFFSET bias, and the (level<<58)|(ix<<29)|iy
     encode are each a single JVM op on longs, and the ix x iy product is
     sequence+transform+flatten — so tile assignment costs no Python
@@ -145,51 +147,49 @@ def tile_square_json(tid: int) -> str:
     )
 
 
-def _clip_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    # Full-C pair lifecycle when available (kernel/pairs.py), Python
-    # composition otherwise — byte-identical clip results either way.
-    # Tile squares repeat heavily across rows: serialize each once.
-    pair_run = resolve_pair_runner()
-    tile_json_cache: dict = {}
+# tile squares repeat heavily across rows: serialize each once per worker
+_tile_square = lru_cache(maxsize=1 << 16)(tile_square_json)
 
-    def cached_tile_json(tid: int) -> str:
-        tj = tile_json_cache.get(tid)
-        if tj is None:
-            tj = tile_json_cache[tid] = tile_square_json(tid)
-        return tj
 
-    for pdf in batches:
-        out = {
-            "tile_id": [], "url": [], "op": [],
-            "clipped_json": [], "n_polys": [], "status": [],
-        }
-        for tile_id, url, op, geom_json in zip(
-            pdf["tile_id"], pdf["url"], pdf["op"], pdf["geom_json"]
-        ):
-            if tile_id is None or pd.isna(tile_id):
-                # untiled row (empty / limit_exceeded upstream): pass through
-                out["tile_id"].append(None)
-                out["url"].append(url)
-                out["op"].append(op)
-                out["clipped_json"].append("")
-                out["n_polys"].append(0)
-                out["status"].append("untiled")
-                continue
-            (_, gj, n, _, _, _, _, status), = pair_run(
-                geom_json, cached_tile_json(int(tile_id)), ("intersection",)
-            )
-            if status != "ok":
-                # degenerate re-ingested geometry: degrade the row, never
-                # the stage (same contract as the boolean-op stage) —
-                # clipped_json stays "" for limit rows, as before
-                gj, n = "", 0
-            out["tile_id"].append(int(tile_id))
-            out["url"].append(url)
-            out["op"].append(op)
-            out["clipped_json"].append(gj)
-            out["n_polys"].append(n)
-            out["status"].append(status)
-        yield pd.DataFrame(out)
+def _clip_to_squares(geoms: pa.Array, squares: list):
+    """Kernel intersection of each geometry with its square JSON:
+    (clipped_json, n_polys, status) columns. A degenerate clip degrades
+    the row, never the stage: status != 'ok' rows carry "" and 0."""
+    out = run_pairs(geoms.to_pylist(), squares, ("intersection",))
+    ok = pc.equal(out.column("status"), "ok")
+    return (
+        pc.if_else(ok, out.column("result_json"), ""),
+        pc.if_else(ok, out.column("n_polys"), pa.scalar(0, pa.int32())),
+        out.column("status"),
+    )
+
+
+def _clip_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    # tile_id is read through Arrow: NULL stays NULL and ids stay exact
+    # int64 (a pandas column holding one NULL turns float64 and rounds
+    # 64-bit cell ids)
+    for batch in batches:
+        tile_ids = batch.column("tile_id")
+        tiled = tile_ids.is_valid()
+        clipped = batch.filter(tiled)
+        clipped_json, n_polys, status = _clip_to_squares(
+            clipped.column("geom_json"),
+            [_tile_square(tid) for tid in clipped.column("tile_id").to_pylist()],
+        )
+        # untiled rows (empty / limit_exceeded upstream) pass through with
+        # status 'untiled'; the clip results fill the tiled positions
+        n = batch.num_rows
+        yield pa.RecordBatch.from_arrays(
+            [
+                tile_ids,
+                batch.column("url"),
+                batch.column("op"),
+                pc.replace_with_mask(pa.repeat("", n), tiled, clipped_json),
+                pc.replace_with_mask(pa.repeat(pa.scalar(0, pa.int32()), n), tiled, n_polys),
+                pc.replace_with_mask(pa.repeat("untiled", n), tiled, status),
+            ],
+            names=["tile_id", "url", "op", "clipped_json", "n_polys", "status"],
+        )
 
 
 def clip_to_tiles(tiled: DataFrame, geom_col: str = "result_json", url_col: str = "subject_url") -> DataFrame:
@@ -200,7 +200,7 @@ def clip_to_tiles(tiled: DataFrame, geom_col: str = "result_json", url_col: str 
         F.col("op"),
         F.col(geom_col).alias("geom_json"),
     )
-    return prepared.mapInPandas(_clip_batches, schema=_CLIP_SCHEMA)
+    return prepared.mapInArrow(_clip_batches, schema=_CLIP_SCHEMA)
 
 
 _WEIGHT_CLIP_SCHEMA = (
@@ -208,29 +208,16 @@ _WEIGHT_CLIP_SCHEMA = (
 )
 
 
-def _weight_clip_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    pair_run = resolve_pair_runner()
-    tile_json_cache: dict = {}
-
-    def cached_tile_json(tid: int) -> str:
-        tj = tile_json_cache.get(tid)
-        if tj is None:
-            tj = tile_json_cache[tid] = tile_square_json(tid)
-        return tj
-
-    for pdf in batches:
-        out = {"case_id": [], "tile_id": [], "clipped_json": [], "status": []}
-        for case_id, tile_id, geom_json in zip(
-            pdf["case_id"], pdf["tile_id"], pdf["geom_json"]
-        ):
-            (_, gj, _n, _, _, _, _, status), = pair_run(
-                geom_json, cached_tile_json(int(tile_id)), ("intersection",)
-            )
-            out["case_id"].append(case_id)
-            out["tile_id"].append(int(tile_id))
-            out["clipped_json"].append(gj if status == "ok" else "")
-            out["status"].append(status)
-        yield pd.DataFrame(out)
+def _weight_clip_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        clipped_json, _, status = _clip_to_squares(
+            batch.column("geom_json"),
+            [_tile_square(tid) for tid in batch.column("tile_id").to_pylist()],
+        )
+        yield pa.RecordBatch.from_arrays(
+            [batch.column("case_id"), batch.column("tile_id"), clipped_json, status],
+            names=["case_id", "tile_id", "clipped_json", "status"],
+        )
 
 
 def bbox_square_json(x0: float, y0: float, x1: float, y1: float) -> str:
@@ -247,7 +234,7 @@ _REGION_AREA_SCHEMA = "case_id long, normalized_json string, status string"
 _NORMALIZE_PAD = 1.0  # see _region_normalize_batches
 
 
-def _region_normalize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _region_normalize_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     # kernel-normalize each geometry by intersecting it with a rectangle
     # STRICTLY larger than its bbox: self-overlaps dissolve to even-odd
     # semantics and holes land in their structural [exterior, holes...]
@@ -257,27 +244,25 @@ def _region_normalize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Da
     # back with its hole as a separate exterior polygon). Padded edges
     # lie strictly outside the bbox, so no geometry point can touch
     # them — clean containment clipping, which is always safe.
-    pair_run = resolve_pair_runner()
-    for pdf in batches:
-        out = {"case_id": [], "normalized_json": [], "status": []}
-        for case_id, geom_json, x0, y0, x1, y1 in zip(
-            pdf["case_id"], pdf["geom_json"],
-            pdf["xmin"], pdf["ymin"], pdf["xmax"], pdf["ymax"],
-        ):
-            (_, gj, _n, _, _, _, _, status), = pair_run(
-                geom_json,
-                bbox_square_json(
-                    float(x0) - _NORMALIZE_PAD,
-                    float(y0) - _NORMALIZE_PAD,
-                    float(x1) + _NORMALIZE_PAD,
-                    float(y1) + _NORMALIZE_PAD,
-                ),
-                ("intersection",),
+    for batch in batches:
+        bounds = zip(*(
+            batch.column(c).to_numpy(zero_copy_only=False)
+            for c in ("xmin", "ymin", "xmax", "ymax")
+        ))
+        squares = [
+            bbox_square_json(
+                float(x0) - _NORMALIZE_PAD,
+                float(y0) - _NORMALIZE_PAD,
+                float(x1) + _NORMALIZE_PAD,
+                float(y1) + _NORMALIZE_PAD,
             )
-            out["case_id"].append(case_id)
-            out["normalized_json"].append(gj if status == "ok" else "")
-            out["status"].append(status)
-        yield pd.DataFrame(out)
+            for x0, y0, x1, y1 in bounds
+        ]
+        normalized_json, _, status = _clip_to_squares(batch.column("geom_json"), squares)
+        yield pa.RecordBatch.from_arrays(
+            [batch.column("case_id"), normalized_json, status],
+            names=["case_id", "normalized_json", "status"],
+        )
 
 
 def tile_area_weights(
@@ -306,7 +291,7 @@ def tile_area_weights(
 
     100 TB shape: tile cover is the pure-JVM cover-cells expression
     (explode is map-side), the kernel clip + the per-case normalization
-    are mapInPandas stages with per-batch tile-square memoization,
+    are mapInArrow stages sharing one tile-square memo,
     areas are codegen folds, and the per-case region area joins back on
     case_id — no collect, no cross-tile shuffle beyond the one agg-free
     equi-join. `geoms` is consumed twice (clip branch + denominator
@@ -328,7 +313,7 @@ def tile_area_weights(
             )
         ).alias("tile_id"),
     )
-    clipped = tiled.select("case_id", "tile_id", "geom_json").mapInPandas(
+    clipped = tiled.select("case_id", "tile_id", "geom_json").mapInArrow(
         _weight_clip_batches, schema=_WEIGHT_CLIP_SCHEMA
     )
     clip_area = clipped.filter(F.col("status") == "ok").select(
@@ -338,7 +323,7 @@ def tile_area_weights(
     )
     normalized = geoms.select(
         "case_id", "geom_json", "xmin", "ymin", "xmax", "ymax"
-    ).mapInPandas(_region_normalize_batches, schema=_REGION_AREA_SCHEMA)
+    ).mapInArrow(_region_normalize_batches, schema=_REGION_AREA_SCHEMA)
     geom_area = normalized.filter(F.col("status") == "ok").select(
         "case_id",
         region_area_column("normalized_json").alias("geom_area"),

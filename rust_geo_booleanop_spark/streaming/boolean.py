@@ -8,8 +8,8 @@ pairs with a custom stateful operator instead:
 - `stream_boolean_pairs` — `applyInPandasWithState` keyed by case_id.
   State holds the first-seen side (url + geometry JSON); when the
   partner arrives — same micro-batch or any later one — the kernel runs
-  (same `resolve_pair_runner` hot path as batch: full-C pair lifecycle
-  when available) and the state collapses to a `done` tombstone.
+  (same `kernel.pairs.run_pairs` primitive as batch: full-C pair
+  lifecycle when available) and the state collapses to a `done` tombstone.
   Per-key state is one geometry string only for cases still missing a
   side, so state size tracks the open-case frontier plus a few bytes
   per completed case.
@@ -17,7 +17,7 @@ pairs with a custom stateful operator instead:
   cover expression as batch (stateless, streams unchanged).
 
 Emitted rows are byte-identical to the batch pipeline's (pinned by
-test, via the SAME `append_pair_results` marshalling helper the batch
+test, via the SAME `kernel_result_batch` column function the batch
 kernel stage uses): the streaming engine adds pair completion, not new
 geometry semantics. Duplicate sides of an already-complete case are
 ignored (first-seen wins) — the corpus contract is one subject + one
@@ -32,32 +32,19 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.boolean_join import (
     BOOLEAN_RESULTS_SCHEMA,
     DEFAULT_OPS,
-    append_pair_results,
-    new_result_rows,
+    kernel_result_batch,
 )
 
 _PAIR_STATE_SCHEMA = (
     "s_url string, s_json string, c_url string, c_json string, done boolean"
 )
-
-# worker-process-local memo: resolve the kernel pair runner once per
-# Python worker, not once per (case_id) state group per micro-batch
-_RUNNER_CACHE: dict = {}
-
-
-def _cached_pair_runner():
-    runner = _RUNNER_CACHE.get("runner")
-    if runner is None:
-        from ..kernel.pairs import resolve_pair_runner
-
-        runner = _RUNNER_CACHE["runner"] = resolve_pair_runner()
-    return runner
 
 
 def _make_pair_fn(ops):
@@ -84,11 +71,16 @@ def _make_pair_fn(ops):
         if s_json and c_json:
             # tombstone: geometry dropped, only the done flag survives
             state.update(("", "", "", "", True))
-            rows = new_result_rows()
-            append_pair_results(
-                rows, _cached_pair_runner(), case_id, s_url, c_url, s_json, c_json, ops
+            pair = pa.RecordBatch.from_pydict(
+                {
+                    "case_id": [case_id],
+                    "subject_url": [s_url],
+                    "clipping_url": [c_url],
+                    "subject_json": [s_json],
+                    "clipping_json": [c_json],
+                }
             )
-            yield pd.DataFrame(rows)
+            yield kernel_result_batch(pair, ops).to_pandas()
         else:
             # half-open case: park the seen side in state and emit nothing
             state.update((s_url, s_json, c_url, c_json, False))

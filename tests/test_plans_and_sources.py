@@ -46,7 +46,7 @@ class TestPlanShapes:
 
         df = boolean_pipeline(extract_geometries(build_documents(spark, TESTDATA)))
         plan = plan_str(df)
-        assert "MapInPandas" in plan  # Arrow-batched Python, not row UDFs
+        assert "MapInArrow" in plan  # Arrow record batches, not row UDFs
         assert "BatchEvalPython" not in plan  # no row-at-a-time Python
 
     def test_bucketed_join_needs_no_exchange(self, spark, tmp_path):
@@ -187,8 +187,8 @@ class TestCompactGeojsonWriter:
 
 def test_flagship_plan_scans_documents_once(spark):
     """The round-3 single-pass pair join: the full flagship plan must hold
-    exactly ONE parquet scan of the documents table and ONE extraction +
-    ONE synthesis + ONE kernel MapInPandas (3 total) — the pre-round-3
+    exactly ONE parquet scan of the documents table, ONE synthesis + ONE
+    extraction MapInPandas and ONE kernel MapInArrow — the pre-round-3
     self-join shape planned the scan and extraction twice, doubling the
     most expensive scan+parse stage at 100 TB."""
     from rust_geo_booleanop_spark.operators import (
@@ -202,7 +202,72 @@ def test_flagship_plan_scans_documents_once(spark):
     tiled = assign_tiles(boolean_pipeline(extract_geometries(docs)))
     plan = tiled._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1
-    assert plan.count("MapInPandas") == 3  # synthesis, extraction, kernel
+    assert plan.count("MapInPandas") == 2  # synthesis, extraction
+    assert plan.count("MapInArrow") == 1  # kernel
+
+
+class TestTiling:
+    def test_clip_keeps_exact_tile_ids_next_to_untiled_rows(self, spark):
+        """One Arrow batch holds untiled rows (empty results: NULL tile_id
+        from explode_outer) next to level-4 and level-6 tiled rows. Every
+        64-bit tile id must come back exact, and every clip must be the
+        kernel intersection with that id's own square. A pandas column
+        with one NULL turns float64 and rounds ids above 2^53."""
+        import json
+        from collections import Counter
+
+        from rust_geo_booleanop_spark.kernel.geojson import multipolygon_to_geometry
+        from rust_geo_booleanop_spark.kernel.pairs import pair_boolean_ops_python
+        from rust_geo_booleanop_spark.operators import assign_tiles, clip_to_tiles
+        from rust_geo_booleanop_spark.operators.tiling import tile_square_json
+        from rust_geo_booleanop_spark.sources.corpus import case_geometry
+
+        disjoint = (
+            [[[(0.0, 0.0), (1.0, 0.0), (1.0, 1.0), (0.0, 1.0), (0.0, 0.0)]]],
+            [[[(5.0, 5.0), (6.0, 5.0), (6.0, 6.0), (5.0, 6.0), (5.0, 5.0)]]],
+        )
+        cases = {f"case{i}": case_geometry(i) for i in range(8)}
+        cases["disjoint"] = disjoint
+        rows = []
+        for url, (subject, clipping) in cases.items():
+            s_json, c_json = (
+                json.dumps(multipolygon_to_geometry(g)) for g in (subject, clipping)
+            )
+            for op, gj, _n, x0, y0, x1, y1, _st in pair_boolean_ops_python(
+                s_json, c_json, ("intersection", "union")
+            ):
+                rows.append((url, op, gj, x0, y0, x1, y1))
+        results = spark.createDataFrame(
+            rows,
+            "subject_url string, op string, result_json string, "
+            "xmin double, ymin double, xmax double, ymax double",
+        )
+        tiled = (
+            assign_tiles(results, level=4)
+            .unionByName(assign_tiles(results, level=6))
+            .coalesce(1)
+        )
+        expected = tiled.select("subject_url", "op", "tile_id").collect()
+        clipped = clip_to_tiles(tiled).collect()
+
+        assert any(r.tile_id is None for r in expected)
+        assert {r.tile_id >> 58 for r in expected if r.tile_id is not None} == {4, 6}
+        assert Counter((r.url, r.op, r.tile_id) for r in clipped) == Counter(
+            tuple(r) for r in expected
+        )
+        geom = {(url, op): gj for url, op, gj, *_ in rows}
+        n_ok = 0
+        for r in clipped:
+            if r.tile_id is None:
+                assert (r.status, r.clipped_json, r.n_polys) == ("untiled", "", 0)
+                continue
+            assert r.status == "ok"
+            ((_, gj, n, *_),) = pair_boolean_ops_python(
+                geom[(r.url, r.op)], tile_square_json(r.tile_id), ("intersection",)
+            )
+            assert (r.clipped_json, r.n_polys) == (gj, n), (r.url, r.op, r.tile_id)
+            n_ok += 1
+        assert n_ok > 0
 
 
 class TestTileAreaWeights:

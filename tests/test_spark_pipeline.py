@@ -1,6 +1,6 @@
 """Spark-path end-to-end tests.
 
-1. The reference fixture suite THROUGH the Spark mapInPandas kernel path:
+1. The reference fixture suite THROUGH the Spark mapInArrow kernel path:
    JVM -> Arrow -> Python kernel -> Arrow -> JVM must be fixture-exact
    (SURVEY.md §5 test plan, layer b).
 2. The synthetic documents pipeline: extraction keeps `text`
@@ -210,3 +210,70 @@ def test_extract_tolerates_dirty_pages(spark):
     assert (r.xmin, r.ymin, r.xmax, r.ymax) == (0.0, 0.0, 4.0, 4.0)
     assert r.geom_json == good_geom and r.text == "t7"
     assert (got[1].case_id, got[1].text) == (8, "t14")
+
+
+def test_kernel_stage_matches_python_pair_runner(spark):
+    """The Spark kernel stage == the pure-Python pair runner, row for row
+    and byte for byte, over in-repo inputs only (no reference fixtures):
+    the criterion generators, every corpus template plus the heavy one, a
+    disjoint pair (empty results: NULL bbox) and an input the C parser
+    declines, which must take the Python fallback inside the primitive.
+    Empty and 1-row inputs keep the result schema."""
+    from rust_geo_booleanop_spark.kernel import bench_cases
+    from rust_geo_booleanop_spark.kernel.native import NATIVE_AVAILABLE
+    from rust_geo_booleanop_spark.kernel.pairs import pair_boolean_ops_python
+    from rust_geo_booleanop_spark.operators.boolean_join import BOOLEAN_RESULTS_SCHEMA
+    from rust_geo_booleanop_spark.sources.corpus import (
+        CORPUS_SIZE,
+        case_template,
+        heavy_template,
+    )
+
+    ops = ("intersection", "union", "diff", "xor", "diff_ba")
+    declined = '{"type":"Polygon","coordinates":[[[0,0],[2,0],[2,2]]],"extra":1}'
+    if NATIVE_AVAILABLE:
+        from rust_geo_booleanop_spark.kernel.native import pair_boolean_ops_native
+
+        assert pair_boolean_ops_native(declined, declined, ops) is None
+
+    def geojson(mp):
+        return json.dumps(multipolygon_to_geometry(mp))
+
+    cases = {
+        "grid": bench_cases.generate_grid_polygons(),
+        "circles_vs_rects": bench_cases.generate_circles_vs_rects(),
+        "random_triangles": bench_cases.generate_random_triangles_polygons(),
+        "heavy": heavy_template(),
+        "disjoint": (
+            [[[(0.0, 0.0), (1.0, 0.0), (1.0, 1.0), (0.0, 1.0), (0.0, 0.0)]]],
+            [[[(5.0, 5.0), (6.0, 5.0), (6.0, 6.0), (5.0, 6.0), (5.0, 5.0)]]],
+        ),
+    }
+    cases.update({f"template{t}": case_template(t) for t in range(CORPUS_SIZE)})
+    inputs = [(name, geojson(s), geojson(c)) for name, (s, c) in cases.items()]
+    inputs.append(("declined", declined, declined))
+    pairs = spark.createDataFrame(
+        [(i, f"{name}/s", f"{name}/c", s, c) for i, (name, s, c) in enumerate(inputs)],
+        "case_id long, subject_url string, clipping_url string, "
+        "subject_json string, clipping_json string",
+    )
+    got = {(r.subject_url, r.op): r for r in apply_boolean_ops(pairs, ops=ops).collect()}
+    assert len(got) == len(inputs) * len(ops)
+    for i, (name, s, c) in enumerate(inputs):
+        for op, gj, n, *bbox, status in pair_boolean_ops_python(s, c, ops):
+            row = got[(f"{name}/s", op)]
+            assert (row.case_id, row.clipping_url) == (i, f"{name}/c")
+            assert (row.result_json, row.n_polys, row.status) == (gj, n, status), (name, op)
+            # the empty result's NaN bbox is stored as NULL
+            assert [row.xmin, row.ymin, row.xmax, row.ymax] == [
+                None if v != v else v for v in bbox
+            ], (name, op)
+
+    schema = spark.createDataFrame([], BOOLEAN_RESULTS_SCHEMA).schema
+    empty = apply_boolean_ops(pairs.limit(0), ops=ops)
+    assert empty.schema == schema and empty.collect() == []
+    one = apply_boolean_ops(pairs.filter(F.col("subject_url") == "heavy/s"), ops=ops)
+    assert one.schema == schema
+    assert [(r.op, r.result_json) for r in one.collect()] == [
+        (op, got[("heavy/s", op)].result_json) for op in ops
+    ]
