@@ -8,8 +8,10 @@ Runs the headline pipelines at $SPARK_GRAFT_SF_DIR (default
 The flagship metric is the full boolean-op + tile-assignment pipeline
 (documents -> extract -> pair join -> 4 kernel ops -> tile explode),
 reported as wall seconds plus derived pages/sec. Set
-SPARK_GRAFT_BENCH_REPLICATE to scale the corpus (deterministic page
-replication; default 1).
+SPARK_GRAFT_BENCH_REPLICATE to scale the flagship corpus (deterministic
+page replication; default 8). Every other op is the __spark_entry__
+contract callable named in `OPS`, timed at $SPARK_GRAFT_SF_DIR as the
+correctness gate grades it.
 """
 
 from __future__ import annotations
@@ -57,30 +59,113 @@ def _stream_mbps(n_proc: int, size_mb: int = 96, iters: int = 3) -> float:
     return round(sum(vals), 0)
 
 
+# One row per benchmarked op: (bench op name, the __spark_entry__ query it
+# times, calm band in seconds). Each op is its contract callable, so bench
+# and correctness gate time and grade the same frame. A calm band is 2x
+# the op's best wall in a calm local[4] sf0.1 run
+# (scripts/bench_runs_r6/calm_63op_local4.json); a best-of-N above 2x its
+# band triggers extra re-runs and attaches a noise probe to the op's
+# entry, so every recorded number carries its own noise evidence.
+OPS = [
+    ("pip_join", "g04_pip_join", 4.5),
+    ("knn_join", "g05_knn_join", 2.2),
+    ("zonal_stats", "g06_zonal_stats", 4.3),
+    ("asof_join", "r15_asof_join", 1.2),
+    ("sessionize", "r16_sessionize", 1.4),
+    ("interval_join", "r24_interval_join", 1.8),
+    ("group_median", "h09_group_median", 1.0),
+    ("focal_sum", "g23_focal_heatmap", 0.8),
+    ("exact_dedup", "t01_exact_dedup", 0.8),
+    ("minhash_dedup", "d01_minhash_pairs", 8.0),
+    ("ngram_jaccard", "d03_ngram_jaccard", 14.4),
+    ("cosine_topk", "s01_cosine_topk", 1.3),
+    ("ivf_topk", "s04_ivf_topk", 7.2),
+    ("pq_topk", "s08_pq_topk", 25.2),
+    ("boilerplate_lines", "d06_boilerplate_lines", 1.8),
+    ("quality_filter", "t11_quality_filter", 3.6),
+    ("skyline", "h10_skyline", 1.5),
+    ("url_dedup", "d05_url_dedup", 0.6),
+    ("exact_quantiles", "h02_exact_quantiles", 3.1),
+    ("stratified_sample", "t12_stratified_sample", 0.4),
+    ("incremental_dedup", "d07_incremental_dedup", 11.7),
+    ("tile_pyramid", "g15_tile_pyramid", 6.9),
+    ("decontaminate", "t15_decontaminate", 11.3),
+    ("lang_balance", "t16_lang_balance", 0.6),
+    ("simplify", "g17_simplify", 6.3),
+    ("line_dedup", "t17_line_dedup", 0.5),
+    ("bigram_collocations", "h03_bigram_assoc", 2.4),
+    ("substring_dup", "d09_substring_dup", 5.8),
+    ("edit_pairs", "d10_edit_pairs", 4.5),
+    ("containment_pairs", "d12_containment_pairs", 6.0),
+    ("zipf_histogram", "h06_zipf_histogram", 0.9),
+    ("vocab_stats", "h04_vocab_stats", 1.1),
+    ("hll_sketch", "h07_hll_sketch", 2.4),
+    ("token_freq_score", "t19_token_freq_score", 2.0),
+    ("cm_sketch", "h08_cm_sketch", 2.3),
+    ("bm25_search", "t18_bm25_search", 2.6),
+    ("length_token_corr", "h05_length_token_corr", 1.2),
+    ("iou", "g19_iou", 7.0),
+    ("tile_weights", "g20_tile_weights", 11.7),
+    ("convex_hull", "g18_convex_hull", 4.6),
+    ("shape_stats", "g21_shape_stats", 5.4),
+    ("group_quantiles", "h11_group_quantiles", 1.3),
+    ("group_mode", "h12_group_mode", 0.8),
+    ("funnel", "h13_funnel", 1.1),
+    ("latest_snapshot", "r32_latest_per_key", 0.7),
+    ("hamming_topk", "s09_hamming_topk", 5.0),
+    ("oov_rate", "t20_oov_rate", 1.9),
+    ("sequence_packing", "t21_sequence_packing", 0.8),
+    ("token_novelty", "t22_token_novelty", 1.5),
+    ("grid_clusters", "g26_grid_clusters", 5.4),
+    ("morton_blocks", "g24_morton_blocks", 0.6),
+    ("weighted_median", "h20_weighted_median", 1.4),
+    ("morans_i", "g32_morans_i", 2.1),
+    ("word_length_profile", "t26_word_length_profile", 1.4),
+    ("hamming_histogram", "s13_hamming_histogram", 2.4),
+    ("array_functions", "r37_array_functions", 1.0),
+    ("salted_flagship", "g33_salted_boolean_pipeline", 13.2),
+    ("winding_audit", "g36_ring_winding_audit", 8.3),
+    ("composition_drift", "t27_composition_drift", 0.9),
+    ("dup_savings", "d17_dup_savings_by_source", 0.8),
+    ("hamming_nn_degree", "s14_hamming_nn_degree", 6.4),
+    ("cell_neighbors", "g37_cell_neighbor_occupancy", 1.5),
+]
+
+# Flagship calm band at the default replicate=8 corpus, same rule and run
+# (other corpus sizes run unbanded).
+FLAGSHIP_CALM_MAX = 18.1
+
+# Calm-box noise readings on a 4-core box: sentinel seconds (range) and
+# 8-worker STREAM-triad MB/s (floor).
+SENTINEL_CALM = [0.25, 0.40]
+STREAM8_CALM_MIN = 19000
+
+
+def sentinel_s() -> float:
+    """Best-of-2 wall seconds of the generated grid/xor criterion case on
+    the pure-Python kernel: the cheap single-threaded co-tenant-noise
+    sentinel (calm band SENTINEL_CALM). Needs no fixture file."""
+    from rust_geo_booleanop_spark.kernel import boolean_op
+    from rust_geo_booleanop_spark.kernel.bench_cases import generate_grid_polygons
+
+    subject, clipping = generate_grid_polygons()
+    best = None
+    for _ in range(2):
+        t0 = time.perf_counter()
+        boolean_op(subject, clipping, "xor")
+        dt = time.perf_counter() - t0
+        if best is None or dt < best:
+            best = dt
+    return round(best, 4)
+
+
 def box_noise_probe() -> dict:
     """Cheap (~3 s) co-tenant-noise snapshot, recorded alongside every
     flagship measurement so a slow number of record carries its own
-    explanation (round-2 driver bench landed in a noise phase with no
-    in-artifact evidence). Calm bands observed on this box (BENCH.md):
-    asia/union 0.42-0.60 s single-threaded; stream8 >= ~40000 MB/s."""
-    from rust_geo_booleanop_spark.kernel.bench_cases import CRITERION_CASES
-
-    make, op = next((m, o) for n, m, o in CRITERION_CASES if n == "asia/union")
-    operands = make()
-    sentinel = None
-    if operands is not None:
-        from rust_geo_booleanop_spark.kernel import boolean_op
-
-        subject, clipping = operands
-        for _ in range(2):
-            t0 = time.perf_counter()
-            boolean_op(subject, clipping, op)
-            dt = time.perf_counter() - t0
-            if sentinel is None or dt < sentinel:
-                sentinel = dt
-        sentinel = round(sentinel, 4)
+    explanation: the single-threaded sentinel plus aggregate memory
+    bandwidth and load."""
     return {
-        "asia_union_s": sentinel,
+        "sentinel_s": sentinel_s(),
         "stream8_mbps": _stream_mbps(8),
         "loadavg_1m": round(os.getloadavg()[0], 1),
     }
@@ -94,69 +179,13 @@ def main():
     # virtualized box) amortizes against real kernel work and pages/sec
     # reflects sustained throughput, not the small-input task-launch floor.
     replicate = int(os.environ.get("SPARK_GRAFT_BENCH_REPLICATE", "8"))
+    only_flagship = os.environ.get("SPARK_GRAFT_BENCH_ONLY") == "flagship"
 
-    from pyspark.sql import functions as F
-
+    from rust_geo_booleanop_spark.kernel import resolve_boolean_op
     from rust_geo_booleanop_spark.operators import (
-        asof_join,
-        balanced_sample,
-        bigram_collocations,
-        bm25_topk,
-        cm_sketch,
-        hll_sketch,
-        pq_topk,
-        token_freq_score,
-        decontaminate,
-        dedup_lines,
         assign_tiles,
         boolean_pipeline,
-        convex_hull_geometries,
-        cosine_topk,
-        apply_boolean_ops,
-        exact_dedup,
-        exact_quantiles,
-        focal_sum,
-        funnel_steps,
-        grid_clusters,
-        group_median,
-        group_mode,
-        morans_i,
-        group_quantiles,
-        hamming_histogram,
-        hamming_topk,
-        latest_snapshot,
-        oov_rate,
-        pack_sequences,
-        token_novelty,
-        weighted_median,
-        word_length_profile,
-        incremental_new_keys,
-        interval_join,
         extract_geometries,
-        gopher_quality_filter,
-        iou_per_case,
-        ivf_cosine_topk,
-        knn_join,
-        length_token_correlation,
-        minhash_dedup,
-        ngram_jaccard_pairs,
-        pair_candidates,
-        pareto_frontier,
-        point_in_polygon_join,
-        remove_boilerplate_lines,
-        sessionize,
-        shape_stats,
-        simplify_geometries,
-        stratified_sample,
-        tile_area_weights,
-        containment_pairs,
-        edit_verified_pairs,
-        substring_dup_stats,
-        tile_pyramid,
-        url_dedup,
-        vocabulary_stats,
-        zipf_histogram,
-        zonal_stats_join,
     )
     from rust_geo_booleanop_spark.plans import get_spark
     from rust_geo_booleanop_spark.sources import build_documents
@@ -168,14 +197,12 @@ def main():
     # noise can't contaminate them. Tracked round-over-round.
     kernel_cases = None
     kernel_cases_python = None
-    if os.environ.get("SPARK_GRAFT_BENCH_ONLY") != "flagship":
-        from rust_geo_booleanop_spark.kernel import resolve_boolean_op
+    if not only_flagship:
         from rust_geo_booleanop_spark.kernel.bench_cases import run_criterion_cases
 
         # kernel_cases = the engine-active kernel (native C when available,
         # round 3+); kernel_cases_python = the pure-Python reference kernel,
-        # directly comparable with the kernel_cases of rounds 1-2 AND the
-        # box-noise calm bands calibrated on it.
+        # directly comparable with the kernel_cases of rounds 1-2.
         kernel_cases = run_criterion_cases(iters=2, op_fn=resolve_boolean_op())
         kernel_cases_python = run_criterion_cases(iters=2)
 
@@ -215,116 +242,18 @@ def main():
     # iterations bounds the noise exposure of the reported number.
     bench_iters = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "2"))
 
-    # Per-op calm bands (upper bound of the observed calm-box wall, sec;
-    # BENCH.md "Headline operator timings", calibrated at the default
-    # replicate=8 corpus). An op whose best-of-N lands above 2x its band
-    # triggers extra re-runs and attaches a sentinel probe to its entry,
-    # so every recorded number carries its own noise evidence — rounds 2
-    # and 3 each put a phantom hot-box regression on record because only
-    # the flagship was defended.
-    op_calm_max = {
-        "pip_join": 2.4,
-        "knn_join": 1.1,
-        "zonal_stats": 2.7,
-        "asof_join": 4.8,
-        "sessionize": 1.3,
-        "interval_join": 1.3,
-        "group_median": 1.3,
-        "focal_sum": 1.0,
-        "exact_dedup": 1.2,
-        "minhash_dedup": 3.1,
-        "ngram_jaccard": 9.0,
-        "cosine_topk": 1.5,
-        "ivf_topk": 1.9,
-        "pq_topk": 3.5,
-        "hll_sketch": 1.2,
-        "bm25_search": 1.0,
-        "token_freq_score": 1.5,
-        "cm_sketch": 1.5,
-        "boilerplate_lines": 0.5,
-        "quality_filter": 0.8,
-        "skyline": 1.0,
-        "url_dedup": 0.5,
-        "exact_quantiles": 2.5,
-        "stratified_sample": 0.5,
-        "decontaminate": 6.0,
-        "lang_balance": 0.6,
-        "simplify": 5.0,
-        "incremental_dedup": 2.0,
-        "tile_pyramid": 1.0,
-        "line_dedup": 1.2,
-        "bigram_collocations": 1.7,
-        "substring_dup": 3.5,
-        "edit_pairs": 4.0,
-        "zipf_histogram": 1.0,
-        "containment_pairs": 4.0,
-        "convex_hull": 3.0,
-        "shape_stats": 3.0,
-        "iou": 5.0,
-        "tile_weights": 6.5,
-        "vocab_stats": 0.6,
-        "length_token_corr": 0.6,
-        # round-4 close additions (calm run scripts/bench_runs_r4/
-        # close_52op_calm.json; bands ~2x the observed calm wall)
-        "group_quantiles": 0.8,
-        "group_mode": 0.8,
-        "funnel": 1.0,
-        "latest_snapshot": 0.6,
-        "hamming_topk": 3.0,
-        "oov_rate": 0.7,
-        "sequence_packing": 0.5,
-        "token_novelty": 1.0,
-        "grid_clusters": 5.5,
-        "morton_blocks": 0.6,
-        # round-4 second wave (calm run scripts/bench_runs_r4/
-        # close_57op_calm.json; bands ~2x the observed calm wall)
-        "weighted_median": 0.6,
-        "morans_i": 0.8,
-        "word_length_profile": 0.5,
-        "hamming_histogram": 2.4,
-        "array_functions": 0.4,
-        # round-5 staged additions (calm run bench_r5 close; bands ~2x
-        # the observed calm wall)
-        "salted_flagship": 6.0,
-        "winding_audit": 5.0,
-        "composition_drift": 0.6,
-        "dup_savings": 0.5,
-        "hamming_nn_degree": 5.0,
-        "cell_neighbors": 0.6,
-    }
-    if replicate == 8:
-        op_calm_max["flagship_boolean_tiling"] = 7.0  # native kernel, r3
-
     op_evidence: dict[str, dict] = {}
 
-    def _sentinel_reading() -> float:
-        """One asia/union pure-Python-kernel timing (calm 0.42-0.60 s) —
-        the cheap single-threaded co-tenant-noise sentinel."""
-        from rust_geo_booleanop_spark.kernel import boolean_op as _bo
-        from rust_geo_booleanop_spark.kernel.bench_cases import CRITERION_CASES
-
-        make, op = next((m, o) for n, m, o in CRITERION_CASES if n == "asia/union")
-        subject, clipping = make()
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            _bo(subject, clipping, op)
-            dt = time.perf_counter() - t0
-            if best is None or dt < best:
-                best = dt
-        return round(best, 4)
-
-    def timed(name, fn, base_iters=None, max_iters=6, samples_out=None):
+    def timed(name, fn, calm_max, max_iters=6):
         """Noise-defended timing for EVERY recorded op. Sample until the
         floor is corroborated (two samples within 10 % of the best) AND
         the best sits inside 2x the op's calm band, or max_iters is
-        spent. On a calm box this costs exactly base_iters runs; a best
+        spent. On a calm box this costs exactly bench_iters runs; a best
         that still lands outside its band goes on record with its own
-        sentinel probe, so the artifact proves whether it was the box or
+        noise probe, so the artifact proves whether it was the box or
         the code."""
         fn()  # untimed warm-up: steady-state worker pool + JIT'd codegen
-        base = max(2, base_iters if base_iters is not None else bench_iters)
-        calm_max = op_calm_max.get(name)
+        base = max(2, bench_iters)
         samples: list[float] = []
         out = None
         while len(samples) < max_iters:
@@ -339,7 +268,7 @@ def main():
                     break
                 # Hot box: once the floor is corroborated with two extra
                 # attempts spent, more re-runs can't prove anything the
-                # attached sentinel probe doesn't — stop burning time.
+                # attached probe doesn't — stop burning time.
                 if corroborated and len(samples) >= base + 2:
                     break
         best = min(samples)
@@ -348,11 +277,9 @@ def main():
         if calm_max is not None:
             evidence["calm_max_s"] = calm_max
             if best > 2.0 * calm_max:
-                evidence["sentinel_after"] = _sentinel_reading()
                 evidence["probe"] = box_noise_probe()
+                evidence["sentinel_after"] = evidence["probe"]["sentinel_s"]
         op_evidence[name] = evidence
-        if samples_out is not None:
-            samples_out.extend(samples)
         return out
 
     # Warm the JVM + ALL Python workers (one task per core, through the
@@ -362,8 +289,7 @@ def main():
 
     # Build the native kernel once on the driver (content-hashed .so)
     # before workers fork: they then just dlopen it.
-    from rust_geo_booleanop_spark.kernel import resolve_boolean_op as _resolve
-    _resolve()
+    resolve_boolean_op()
 
     def _warm(batches):
         import pandas as _pd  # noqa: F401
@@ -385,7 +311,7 @@ def main():
         tiled = assign_tiles(boolean_pipeline(geoms))
         return tiled.count()
 
-    # timed() runs each op once untimed first. The pipelines chain up to
+    # Every op gets one untimed run first. The pipelines chain up to
     # ~3 Arrow evals per task, each leasing its own Python worker
     # concurrently, so peak worker demand is ~3x cores; the warm-up
     # iteration grows the reused-worker pool to that demand (fresh forks
@@ -393,459 +319,29 @@ def main():
     # the steady state measures the engine, not the fork storm — on a real
     # cluster the pool persists across jobs anyway.
     probe_before = box_noise_probe()
-    flagship_samples: list[float] = []
     n_tiled = timed(
-        "flagship_boolean_tiling", flagship, base_iters=bench_iters,
-        samples_out=flagship_samples,
+        "flagship_boolean_tiling", flagship,
+        FLAGSHIP_CALM_MAX if replicate == 8 else None,
     )
     probe_after = box_noise_probe()
-    section_sentinels: dict[str, float] = {}
     noise = {
-        "flagship_samples": flagship_samples,
+        "flagship_samples": op_evidence["flagship_boolean_tiling"]["samples"],
         "probe_before": probe_before,
         "probe_after": probe_after,
         "ops": op_evidence,
-        "section_sentinels": section_sentinels,
-        "calm_bands": {"asia_union_s": [0.42, 0.60], "stream8_mbps_min": 40000},
+        "calm_bands": {"sentinel_s": SENTINEL_CALM, "stream8_mbps_min": STREAM8_CALM_MIN},
     }
 
-    if os.environ.get("SPARK_GRAFT_BENCH_ONLY") == "flagship":
-        print(json.dumps({
-            "metric": "flagship_boolean_tiling_wall_sec",
-            "value": timings["flagship_boolean_tiling"],
-            "unit": "sec", "queries": timings, "sf": sf_dir, "cpus": n_workers,
-            "executors": executors, "pages": pages, "tiled_rows": n_tiled,
-            "pages_per_sec": round(pages / timings["flagship_boolean_tiling"], 1),
-            "noise": noise,
-        }))
-        spark.stop()
-        return
+    # Every other op is its contract callable, written to the noop sink:
+    # a count() would let Catalyst prune pure-JVM projection columns and
+    # skip the op's work.
+    qs = {**entrymod.queries(), **entrymod.STAGED_QUERIES}
+    for name, query, calm_max in [] if only_flagship else OPS:
 
-    # --- spatial joins ---
-    section_sentinels["spatial"] = _sentinel_reading()
-    points = entrymod._points(spark, sf_dir)
-    zones = entrymod._zones(spark)
-    timed("pip_join", lambda: point_in_polygon_join(points, zones).count())
-    queries_df = spark.createDataFrame(
-        entrymod._KNN_QUERIES, "query_id int, qx double, qy double"
-    )
-    timed("knn_join", lambda: knn_join(points, queries_df, k=5).count())
-    timed("zonal_stats", lambda: zonal_stats_join(points, zones).count())
+        def write_noop(run=qs[query]):
+            run(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-    # --- temporal ops over the events stream ---
-    section_sentinels["temporal"] = _sentinel_reading()
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"), "user_id", "ts"
-    )
-    clicks = events.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", "event_id"
-    )
-    timed(
-        "asof_join",
-        lambda: asof_join(
-            purchases, clicks,
-            left_key="user_id", right_key="user_id",
-            left_time="ts", right_time="ts",
-            right_cols=["event_id"], right_tie="event_id",
-        ).count(),
-    )
-    timed(
-        "sessionize",
-        lambda: sessionize(events.select("user_id", "ts", "event_id")).count(),
-    )
-    incidents = events.filter(F.col("event_type") == "error").select(
-        F.col("event_id").alias("incident_id"), "user_id",
-        F.col("ts").alias("t_start"),
-        (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("t_end"),
-    )
-    timed(
-        "interval_join",
-        lambda: interval_join(
-            events.select("event_id", "user_id", "ts"), incidents,
-            point_time="ts", start_col="t_start", end_col="t_end",
-            key_col="user_id", bucket_seconds=1800,
-        ).count(),
-    )
-    timed(
-        "group_median",
-        lambda: group_median(
-            events.select("event_type", "value", "event_id"),
-            "event_type", "value", "event_id",
-        ).count(),
-    )
-    grid_cells = (
-        events.select(
-            F.expr("(event_id % 997) DIV 50").alias("gx"),
-            F.expr("((event_id * 31) % 983) DIV 50").alias("gy"),
-        )
-        .groupBy("gx", "gy")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    timed("focal_sum", lambda: focal_sum(grid_cells, radius=1).count())
-
-    # --- training-data pipeline ops ---
-    section_sentinels["dedup"] = _sentinel_reading()
-    documents = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    timed("exact_dedup", lambda: exact_dedup(documents).count())
-    timed("minhash_dedup", lambda: minhash_dedup(documents, threshold=0.7).count())
-    timed(
-        "ngram_jaccard",
-        lambda: ngram_jaccard_pairs(documents, threshold=0.5).count(),
-    )
-    # The driver testdata is ONE parquet file per table; a real corpus
-    # arrives in many splits. Repartition once at read so the similarity
-    # ops see a cluster-shaped source instead of a single-task scan (the
-    # ops themselves deliberately do NOT repartition the corpus — at scale
-    # that shuffle would carry every embedding).
-    section_sentinels["similarity"] = _sentinel_reading()
-    embeddings = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(
-        n_workers
-    )
-    emb_queries = embeddings.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    timed("cosine_topk", lambda: cosine_topk(embeddings, emb_queries, k=10).count())
-    timed(
-        "ivf_topk",
-        lambda: ivf_cosine_topk(embeddings, emb_queries, k=10, nprobe=2, stride=37).count(),
-    )
-    timed(
-        "pq_topk",
-        lambda: pq_topk(embeddings, emb_queries, k=10, m=8, stride=11).count(),
-    )
-
-    # --- text cleaning / filtering ops (round 4) ---
-    # Same deterministic synthetic structure as the d05/d06 contract
-    # queries: the single-line corpus gets a multi-line page shape and a
-    # messy URL so the ops exercise their real plans (DF agg + anti-join;
-    # regexp chain + hash agg) rather than degenerate 1-line inputs.
-    section_sentinels["text"] = _sentinel_reading()
-    multiline = documents.withColumn(
-        "text",
-        F.concat_ws(
-            "\n",
-            F.lit("please accept our cookie policy"),
-            F.col("text"),
-            F.concat(F.lit("(c) "), F.col("source"), F.lit(" media group")),
-            F.concat(
-                F.lit("ref "), (F.col("doc_id") - F.col("doc_id") % 2).cast("string")
-            ),
-        ),
-    )
-    timed(
-        "boilerplate_lines",
-        lambda: remove_boilerplate_lines(multiline, min_docs=3).count(),
-    )
-    timed(
-        "quality_filter",
-        lambda: gopher_quality_filter(
-            documents, min_tokens=40, min_stopwords=1, min_distinct_frac=0.45
-        ).count(),
-    )
-    doc_toks = F.filter(
-        F.split(F.trim(F.coalesce(F.col("text"), F.lit(""))), r"\s+"),
-        lambda x: x != "",
-    )
-    doc_metrics = documents.select(
-        "doc_id",
-        F.size(doc_toks).cast("long").alias("n_tokens"),
-        F.size(F.array_distinct(doc_toks)).cast("long").alias("n_distinct"),
-    )
-    timed(
-        "skyline",
-        lambda: pareto_frontier(
-            doc_metrics, "n_tokens", "n_distinct", minimize_x=True
-        ).count(),
-    )
-    urls = documents.withColumn(
-        "url",
-        F.concat(
-            F.lit("HTTPS://WWW."),
-            F.col("source"),
-            F.lit(".Example.COM/page/"),
-            (F.col("doc_id") % 7).cast("string"),
-            F.lit("/?utm_source=feed&ref="),
-            F.col("doc_id").cast("string"),
-        ),
-    )
-    timed("url_dedup", lambda: url_dedup(urls).count())
-
-    # --- sketch / sampling ops (round 4) ---
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    timed(
-        "exact_quantiles",
-        lambda: exact_quantiles(
-            lineitem, "l_extendedprice", [0.25, 0.5, 0.75, 0.9, 0.99]
-        ).count(),
-    )
-    timed(
-        "stratified_sample",
-        lambda: stratified_sample(
-            documents.select("doc_id", "lang"),
-            "doc_id",
-            "lang",
-            {"en": 0.5, "de": 0.25, "fr": 0.1},
-            default_rate=0.05,
-        ).count(),
-    )
-    from rust_geo_booleanop_spark.operators.dedup import normalized_text_key
-
-    keyed_docs = documents.select(
-        "doc_id", normalized_text_key("text").alias("key")
-    )
-    prior_keys = keyed_docs.filter(F.col("doc_id") % 3 == 0).select("key")
-    timed(
-        "incremental_dedup",
-        lambda: incremental_new_keys(keyed_docs, prior_keys, "key").count(),
-    )
-    # pyramid over a synthetic tiled frame (pure JVM input) so the number
-    # isolates the rollup operator, not a re-run of the kernel pipeline
-    from rust_geo_booleanop_spark.functions.cells import cell_id_expr
-
-    pyramid_input = spark.range(max(200_000, pages * 2)).select(
-        cell_id_expr(F.col("id") % 1000, F.col("id") % 97, 4).alias("tile_id")
-    )
-    timed(
-        "tile_pyramid",
-        lambda: tile_pyramid(pyramid_input, from_level=4, to_level=0).count(),
-    )
-    eval_docs = documents.filter(F.col("doc_id") % 41 == 0)
-    train_docs = documents.filter(F.col("doc_id") % 41 != 0)
-    timed(
-        "decontaminate",
-        lambda: decontaminate(train_docs, eval_docs, n=4).count(),
-    )
-    timed(
-        "lang_balance",
-        lambda: balanced_sample(
-            documents.select("doc_id", "lang"), "lang", "doc_id"
-        ).count(),
-    )
-    # re-runs extraction so the leg is self-contained; the DP stage is
-    # the dominant term (extraction alone is the g16-style map pass)
-    timed(
-        "simplify",
-        lambda: simplify_geometries(
-            extract_geometries(docs).select("case_id", "role", "geom_json"),
-            tol=2.0,
-        ).count(),
-    )
-    timed(
-        "line_dedup",
-        lambda: dedup_lines(documents).agg(
-            F.sum("n_lines_out")
-        ).collect(),
-    )
-    timed(
-        "bigram_collocations",
-        lambda: bigram_collocations(documents, min_count=5, k=20).count(),
-    )
-    timed(
-        "substring_dup",
-        lambda: substring_dup_stats(documents, window=8)
-        .agg(F.sum("n_dup_windows"))
-        .collect(),
-    )
-    timed(
-        "edit_pairs",
-        lambda: edit_verified_pairs(documents, window=8, max_dist=6)
-        .count(),
-    )
-    timed(
-        "containment_pairs",
-        lambda: containment_pairs(documents, window=8, threshold=0.8).count(),
-    )
-    timed(
-        "zipf_histogram",
-        lambda: zipf_histogram(documents).count(),
-    )
-    timed(
-        "vocab_stats",
-        lambda: vocabulary_stats(documents).count(),
-    )
-    timed(
-        "hll_sketch",
-        lambda: hll_sketch(documents).count(),
-    )
-    timed(
-        "token_freq_score",
-        lambda: token_freq_score(documents).agg(F.sum("freq_sum")).collect(),
-    )
-    timed(
-        "cm_sketch",
-        lambda: cm_sketch(documents).agg(F.sum("cnt")).collect(),
-    )
-    timed(
-        "bm25_search",
-        lambda: bm25_topk(documents, terms=["dup", "join", "window"], k=10).count(),
-    )
-    timed(
-        "length_token_corr",
-        lambda: length_token_correlation(documents).count(),
-    )
-    # re-runs extraction like `simplify` so the leg is self-contained
-    timed(
-        "iou",
-        lambda: iou_per_case(
-            apply_boolean_ops(
-                pair_candidates(extract_geometries(docs)),
-                ops=("intersection", "union"),
-            )
-        )
-        .agg(F.sum("iou"))
-        .collect(),
-    )
-    # re-runs extraction too; level 6 = the g20 grid (~10 tiles/subject)
-    timed(
-        "tile_weights",
-        lambda: tile_area_weights(
-            extract_geometries(docs).filter(F.col("role") == "subject"),
-            level=6,
-        )
-        .agg(F.sum("weight"))
-        .collect(),
-    )
-    timed(
-        "convex_hull",
-        lambda: convex_hull_geometries(
-            extract_geometries(docs).select("case_id", "role", "geom_json")
-        )
-        .agg(F.sum("n_hull_vertices"))
-        .collect(),
-    )
-    # pure-JVM shoelace/centroid/perimeter folds; extraction dominates
-    timed(
-        "shape_stats",
-        lambda: shape_stats(
-            extract_geometries(docs).select("case_id", "role", "geom_json")
-        )
-        .agg(F.sum("region_area"), F.sum("perimeter"))
-        .collect(),
-    )
-
-    # --- round-4 late additions (staged for the round-5 contract) ---
-    section_sentinels["staged"] = _sentinel_reading()
-    timed(
-        "group_quantiles",
-        lambda: group_quantiles(
-            events.select("event_type", "value", "event_id"),
-            "event_type", "value", "event_id", [25, 50, 75, 90],
-        ).count(),
-    )
-    timed(
-        "group_mode",
-        lambda: group_mode(
-            events.select("user_id", "event_type"), "user_id", "event_type"
-        ).count(),
-    )
-    timed(
-        "funnel",
-        lambda: funnel_steps(
-            events.select("user_id", "ts", "event_type"),
-            ["view", "click", "purchase"],
-        ).count(),
-    )
-    timed(
-        "latest_snapshot",
-        lambda: latest_snapshot(
-            events.select("user_id", "ts", "event_id", "event_type", "value"),
-            "user_id", "ts", "event_id",
-        ).count(),
-    )
-    timed(
-        "hamming_topk",
-        lambda: hamming_topk(embeddings, emb_queries, k=10, dim=64).count(),
-    )
-    timed("oov_rate", lambda: oov_rate(documents, vocab_size=1000).count())
-    timed(
-        "sequence_packing",
-        lambda: pack_sequences(documents, capacity=2048).count(),
-    )
-    timed("token_novelty", lambda: token_novelty(documents).count())
-    timed(
-        "grid_clusters",
-        lambda: grid_clusters(grid_cells, min_val=25).count(),
-    )
-    from rust_geo_booleanop_spark.functions import morton_expr
-
-    timed(
-        "morton_blocks",
-        lambda: events.select(
-            morton_expr(F.col("event_id") % 997, (F.col("event_id") * 31) % 983)
-            .alias("m")
-        )
-        .groupBy(F.shiftright(F.col("m"), 10))
-        .count()
-        .count(),
-    )
-
-    # --- round-4 second-wave staged additions ---
-    timed(
-        "weighted_median",
-        lambda: weighted_median(
-            events.select(
-                "event_type", "value", "event_id",
-                (F.lit(1) + F.col("event_id") % 5).alias("w"),
-            ),
-            "event_type", "value", "w", "event_id",
-        ).count(),
-    )
-    timed("morans_i", lambda: morans_i(grid_cells, count_col="n").count())
-    timed(
-        "word_length_profile",
-        lambda: word_length_profile(documents).count(),
-    )
-    timed(
-        "hamming_histogram",
-        lambda: hamming_histogram(embeddings, sample_mod=5).count(),
-    )
-    timed(
-        "array_functions",
-        lambda: documents.select(
-            "doc_id",
-            F.aggregate(
-                F.filter(
-                    F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))), r"\s+"),
-                    lambda x: x != "",
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + F.length(x),
-            ).alias("total_chars"),
-        )
-        .agg(F.sum("total_chars"))
-        .collect(),
-    )
-
-    # --- round-5 staged additions (round-6 contract; the callables come
-    # from the contract module so bench and gate share ONE definition —
-    # the dict union keeps the lookup working after the round-6
-    # promotion empties STAGED_QUERIES) ---
-    contract_qs = {**entrymod.queries(), **entrymod.STAGED_QUERIES}
-    timed(
-        "salted_flagship",
-        lambda: contract_qs["g33_salted_boolean_pipeline"](spark, sf_dir).count(),
-    )
-    timed(
-        "winding_audit",
-        lambda: contract_qs["g36_ring_winding_audit"](spark, sf_dir).count(),
-    )
-    timed(
-        "composition_drift",
-        lambda: contract_qs["t27_composition_drift"](spark, sf_dir).count(),
-    )
-    timed(
-        "dup_savings",
-        lambda: contract_qs["d17_dup_savings_by_source"](spark, sf_dir).count(),
-    )
-    timed(
-        "hamming_nn_degree",
-        lambda: contract_qs["s14_hamming_nn_degree"](spark, sf_dir).count(),
-    )
-    timed(
-        "cell_neighbors",
-        lambda: contract_qs["g37_cell_neighbor_occupancy"](spark, sf_dir).count(),
-    )
+        timed(name, write_noop, calm_max)
 
     flagship_sec = timings["flagship_boolean_tiling"]
     result = {

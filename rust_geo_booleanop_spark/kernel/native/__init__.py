@@ -270,8 +270,6 @@ def _load_one(f32: bool, coord_ctype, result_struct):
 
 def _load() -> None:
     global _LIB, NATIVE_AVAILABLE
-    if os.environ.get("SPARK_GRAFT_NO_NATIVE"):
-        return
     try:
         _LIB = _load_one(False, c_double, _MartinezResult)
         NATIVE_AVAILABLE = _LIB is not None
@@ -284,7 +282,7 @@ def _load_f32() -> None:
     """The f32 build is loaded lazily on first f32-native call (most
     deployments never touch the narrow-width surface)."""
     global _LIB32, F32_NATIVE_AVAILABLE
-    if _LIB32 is not None or os.environ.get("SPARK_GRAFT_NO_NATIVE"):
+    if _LIB32 is not None:
         return
     try:
         _LIB32 = _load_one(True, ctypes.c_float, _MartinezResult32)

@@ -160,22 +160,17 @@ def kernel_result_batch(pairs: pa.RecordBatch, ops: Sequence[str]) -> pa.RecordB
     )
 
 
-def apply_boolean_ops(
-    pairs: DataFrame, ops: Sequence[str] = DEFAULT_OPS, rebalance: bool = True
-) -> DataFrame:
-    """(case_id, *_url, *_json) pairs -> one result row per (pair, op).
+def apply_boolean_ops(pairs: DataFrame, ops: Sequence[str] = DEFAULT_OPS) -> DataFrame:
+    """(case_id, *_url, *_json) pairs -> one result row per (pair, op)."""
+    from .spatial_join import ensure_parallelism
 
-    `rebalance` (default ON) round-robins pairs across the cluster before
-    the kernel stage. This is load-bearing: upstream joins of small/
-    broadcastable inputs produce NO shuffle, so the pair table inherits the
-    file scan's partitioning — a single-file source would silently
-    serialize the (CPU-dominant) kernel onto one core. The extra shuffle
-    moves only the small pair rows; kernel cost per row dwarfs it.
-    """
-    if rebalance:
-        from .spatial_join import ensure_parallelism
-
-        pairs = ensure_parallelism(pairs)
+    # Round-robin the pairs across the cluster before the kernel stage.
+    # This is load-bearing: upstream joins of small/broadcastable inputs
+    # produce NO shuffle, so the pair table inherits the file scan's
+    # partitioning — a single-file source would silently serialize the
+    # (CPU-dominant) kernel onto one core. The extra shuffle moves only
+    # the small pair rows; kernel cost per row dwarfs it.
+    pairs = ensure_parallelism(pairs)
     ops = tuple(ops)
 
     def kernel_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

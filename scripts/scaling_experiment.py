@@ -23,7 +23,7 @@ deliver. Pinning charges every leg its own auxiliary work, like real
 executors. Caveat recorded with the run: under a 4-core pin the
 in-bench stream8 probe timeshares 8 workers over 4 cores, so its MB/s
 reading is not comparable to unpinned calm bands (the single-threaded
-asia/union sentinel stays valid).
+grid/xor sentinel stays valid).
 """
 
 from __future__ import annotations
@@ -37,7 +37,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _leg_sentinel(leg: dict):
-    """Compact per-leg noise evidence: the single-threaded asia/union
+    """Compact per-leg noise evidence: the single-threaded grid/xor
     sentinel from bench.py's before/after probes.  A hot box inflates
     these (no Spark involved), so readers can separate co-tenant noise
     from engine scaling without trusting the ratio alone."""
@@ -45,7 +45,7 @@ def _leg_sentinel(leg: dict):
     vals = []
     for key in ("probe_before", "probe_after"):
         probe = noise.get(key) or {}
-        s = probe.get("asia_union_s")
+        s = probe.get("sentinel_s")
         if s is not None:
             vals.append(s)
     return vals or None
